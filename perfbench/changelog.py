@@ -36,6 +36,11 @@ EPOCH = np.datetime64("2026-03-01T00:00:00", "us")
 SPAN_US = 6 * 3600 * 1_000_000  # commit times spread over six hours
 MAX_TURNS = 8
 JITTER_US = 120 * 1_000_000
+EXTRA_RATE = 1.2  # extra events per initial insert
+HOT_FRAC = 0.3  # share of the extras on the hot conversation
+DUP_RATE = 0.05  # redelivered share
+WINDOW = 64  # delivery scramble, in positions
+STRAGGLE_RATE = 0.01  # share delivered 1-3 files late
 
 # same columns and types as dipper_spark.schemas.CHANGELOG_SCHEMA
 WIRE_SCHEMA = pa.schema([
@@ -73,8 +78,7 @@ def _json_str(s: pd.Series) -> pd.Series:
     return out
 
 
-def make_events(seed: int, n_conv: int, extra_rate: float = 1.2, hot_frac: float = 0.3,
-                v2_from=lambda n: 0, conv_prefix: str = "c") -> pd.DataFrame:
+def make_events(seed: int, n_conv: int, v2_from) -> pd.DataFrame:
     """Logical log in lsn (commit) order: lsn, op, ts, conv_id, turn_idx, payload,
     source, source_offset.  Conversation 0 is the hot one; `v2_from(n)`
     gives the first lsn with a v2 payload for a log of n events."""
@@ -86,8 +90,8 @@ def make_events(seed: int, n_conv: int, extra_rate: float = 1.2, hot_frac: float
     ins_commit = start[conv_i] + turn_i * 7_000_000
     n_ins = len(conv_i)
 
-    n_extra = int(n_ins * extra_rate)
-    hot = rng.random(n_extra) < hot_frac
+    n_extra = int(n_ins * EXTRA_RATE)
+    hot = rng.random(n_extra) < HOT_FRAC
     cold = np.minimum((rng.random(n_extra) ** 3 * (n_conv - 1)).astype(np.int64) + 1, n_conv - 1)
     conv_e = np.where(hot, 0, cold)
     turn_e = (rng.random(n_extra) * turns[conv_e]).astype(np.int64)
@@ -135,15 +139,14 @@ def make_events(seed: int, n_conv: int, extra_rate: float = 1.2, hot_frac: float
     src = rng.integers(0, 4, size=n)
     df = pd.DataFrame({
         "lsn": lsn, "op": op, "ts": ts,
-        "conv_id": pd.Series(conv).map(lambda c: f"{conv_prefix}{c:07d}"),
+        "conv_id": pd.Series(conv).map(lambda c: f"c{c:07d}"),
         "turn_idx": turn, "payload": payload, "source": pd.Series(src).map("wal{}".format),
     })
     df["source_offset"] = df.groupby("source").cumcount().astype(np.int64)
     return df
 
 
-def deliver(events: pd.DataFrame, seed: int, file_events: list[int],
-            dup_rate: float = 0.05, window: int = 64, straggle_rate: float = 0.01) -> list[pd.DataFrame]:
+def deliver(events: pd.DataFrame, seed: int, file_events: list[int]) -> list[pd.DataFrame]:
     """Delivery layout: duplicates, bounded scramble, stragglers that
     cross file boundaries.  `file_events` lists the number of logical
     events per file, in lsn order; returns one frame per file."""
@@ -153,11 +156,11 @@ def deliver(events: pd.DataFrame, seed: int, file_events: list[int],
     bounds = np.cumsum([0] + file_events)
     fidx = np.searchsorted(bounds, np.arange(n), side="right") - 1
     size = np.asarray(file_events, dtype=np.float64)[fidx]
-    pos = np.arange(n) + rng.integers(-window, window + 1, size=n)
-    strag = rng.random(n) < straggle_rate
+    pos = np.arange(n) + rng.integers(-WINDOW, WINDOW + 1, size=n)
+    strag = rng.random(n) < STRAGGLE_RATE
     pos = pos + np.where(strag, rng.uniform(1.0, 3.0, size=n) * size, 0)
-    dup = np.flatnonzero(rng.random(n) < dup_rate)
-    dpos = dup + rng.uniform(0, 2 * window, size=len(dup)) + np.where(
+    dup = np.flatnonzero(rng.random(n) < DUP_RATE)
+    dpos = dup + rng.uniform(0, 2 * WINDOW, size=len(dup)) + np.where(
         rng.random(len(dup)) < 0.25, size[dup], 0)
     rows = np.concatenate([np.arange(n), dup])
     key = np.concatenate([pos, dpos])

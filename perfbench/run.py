@@ -1,6 +1,6 @@
-"""CDC benchmark: backfill, stream, serve and queries on the public API.
+"""CDC benchmark: backfill, stream (with reads) and queries on the public API.
 
-    python3 perfbench/run.py --workload backfill|stream|serve|queries \
+    python3 perfbench/run.py --workload backfill|stream|queries \
         --seed N --seconds S --trace 0|1
 
 Run from the repository root.  Each run is one process: it starts a
@@ -33,21 +33,20 @@ ROOT = os.getcwd()
 WORK_BASE = os.path.join(ROOT, ".perfbench_work")
 sys.path[:0] = [HERE, ROOT]
 
-WORKLOADS = ("backfill", "stream", "serve", "queries")
+WORKLOADS = ("backfill", "stream", "queries")
 QUERIES = ["agg_hash_group_q1", "join_broadcast_dim", "join_sort_merge", "join_range_interval",
            "agg_maxby_lww", "agg_salted_skew", "win_topk_per_group", "sort_limit_topk",
            "udf_pandas_scalar_norm", "embedding_cosine_topk", "dedup_exact_keep_first"]
 
 # input sizes (see README.md for what they produce)
-BACKFILL_CONV = 20_000
+BACKFILL_CONV = 15_000
+BACKFILL_WARMUPS = 2
+BACKFILL_ROUND = 3  # replays per round
 STREAM_CONV = 8_000
 STREAM_BASE_FRAC = 0.70
 STREAM_FILE_EVENTS = 2_500
-STREAM_FILES = 24
 STREAM_FILES_PER_ROUND = 2
-SERVE_INGEST_FILES = 2
-SERVE_ROUND = (4, 4, 1)  # point lookups, conversation lookups, scans per round
-QUERY_SCALE = 0.05
+READ_ROUND = (4, 2, 1)  # point lookups, conversation lookups, scans after the stream
 JVM_HEAP = "4g"
 
 
@@ -127,7 +126,9 @@ def start_session(ctx: Ctx):
         "spark.driver.memory": JVM_HEAP,
         "spark.local.dir": ctx.path("spark_local"),
         "spark.sql.warehouse.dir": ctx.path("warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={ctx.path('tmp')}",
+        # initial heap = max heap: a growing heap kept replays slowing down
+        # for the first ~40 s of a run
+        "spark.driver.extraJavaOptions": f"-Xms{JVM_HEAP} -Djava.io.tmpdir={ctx.path('tmp')}",
         "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
         "spark.ui.showConsoleProgress": "false",
     }
@@ -172,8 +173,11 @@ def lineage_rows(table_root: str) -> list[dict]:
 
 
 def data_files(table_root: str) -> dict[str, int]:
+    """Data files of a table: name -> bytes."""
     d = os.path.join(table_root, "data")
-    return {fn: os.path.getsize(os.path.join(d, fn)) for fn in os.listdir(d) if fn.endswith(".parquet")}
+    if not os.path.isdir(d):
+        return {}
+    return {e.name: e.stat().st_size for e in os.scandir(d) if e.name.endswith(".parquet")}
 
 
 def check_state(table, ref_df, ref_hash: str, what: str) -> int:
@@ -212,15 +216,16 @@ def backfill(ctx: Ctx) -> dict:
     ref_df, info = REF.lww_state(files)
     ref_hash = REF.state_hash(ref_df)
     note("reference computed")
-    replay(spark, ctx.path("log"), ctx.path("warm"))  # full-size warm-up
-    note("warm-up replay done")
-    shutil.rmtree(ctx.path("warm"))
+    for i in range(BACKFILL_WARMUPS):  # at full size: the first timed replays are still warming
+        replay(spark, ctx.path("log"), ctx.path(f"warm{i}"))
+        shutil.rmtree(ctx.path(f"warm{i}"))
+        note(f"warm-up replay {i} done")
     setup_s = since_start()
 
     walls, bytes_ev, last = [], [], None
     t_end = time.monotonic() + ctx.seconds
     k = 0
-    while time.monotonic() < t_end or k == 0:
+    while time.monotonic() < t_end or k % BACKFILL_ROUND:
         root = ctx.path(f"t{k}")
         with ctx.scope(f"replay{k}"):
             t = time.monotonic()
@@ -271,30 +276,11 @@ def prefix_self_times(ctx: Ctx) -> None:
 
 # -------------------------------------------------------------- stream ---
 
-def make_listener(spark):
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class Progress(StreamingQueryListener):
-        def __init__(self):
-            self.batches = []
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            self.batches.append({"run": str(p.runId), "batch": p.batchId, "rows": p.numInputRows,
-                                 "ms": dict(p.durationMs or {})})
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    lis = Progress()
-    spark.streams.addListener(lis)
-    return lis
+def batches(query) -> list[dict]:
+    """The micro-batches one ingest() call ran, from its own query's
+    progress (recorded before the query terminates)."""
+    return [{"batch": p.batchId, "rows": p.numInputRows, "ms": dict(p.durationMs or {})}
+            for p in query.recentProgress]
 
 
 def stream_inputs(ctx: Ctx):
@@ -306,15 +292,12 @@ def stream_inputs(ctx: Ctx):
 
     ev = C.make_events(ctx.seed, STREAM_CONV, v2_from=lambda n: int(n * STREAM_BASE_FRAC)
                        + STREAM_FILE_EVENTS // 2)
-    n = len(ev)
-    base_n = int(n * STREAM_BASE_FRAC)
-    deliv = [STREAM_FILE_EVENTS] * min(STREAM_FILES, (n - base_n) // STREAM_FILE_EVENTS)
-    rest = n - base_n - sum(deliv)
+    base_n = int(len(ev) * STREAM_BASE_FRAC)
+    deliv = [STREAM_FILE_EVENTS] * ((len(ev) - base_n) // STREAM_FILE_EVENTS)
     base_sizes = [base_n // 4] * 3 + [base_n - 3 * (base_n // 4)]
-    frames = C.deliver(ev.iloc[: base_n + sum(deliv) + rest], ctx.seed, base_sizes + deliv + [rest])
+    frames = C.deliver(ev.iloc[: base_n + sum(deliv)], ctx.seed, base_sizes + deliv)
     base = write_log(frames[:4], ctx.path("base"))
-    staged = write_log(frames[4:4 + len(deliv)], ctx.path("staged"),
-                       names=[f"d{i:05d}" for i in range(len(deliv))])
+    staged = write_log(frames[4:], ctx.path("staged"), names=[f"d{i:05d}" for i in range(len(deliv))])
     return base, staged
 
 
@@ -339,37 +322,36 @@ def stream(ctx: Ctx) -> dict:
     spark = ctx.spark
     base, staged = stream_inputs(ctx)
     root, src, ckpt = ctx.path("table"), ctx.path("src"), ctx.path("ckpt")
-    lis = make_listener(spark)
     note(f"generated {len(base)} base + {len(staged)} delivery files")
     with ctx.scope("base_replay"):
         replay(spark, ctx.path("base"), root)
     note("base table built")
     delivered = deliver_files(staged, 1, src)  # warm-up micro-batch
     with ctx.scope("warm_ingest"):
-        ingest(spark, src, root, ckpt, max_files_per_trigger=1)
-    n_warm = len(lis.batches)
+        _t, q, _st = ingest(spark, src, root, ckpt, max_files_per_trigger=1)
+    n_warm = len(batches(q))
+    check(n_warm == 1, f"stream: the warm-up ingest ran {n_warm} micro-batches")
     note("warm-up micro-batch done")
     setup_s = since_start()
 
-    rounds, events = [], []
+    rounds, events, timed = [], [], []
     t_end = time.monotonic() + ctx.seconds
     k = 0
     while (time.monotonic() < t_end or k == 0) and len(staged) >= STREAM_FILES_PER_ROUND:
         new = deliver_files(staged, STREAM_FILES_PER_ROUND, src)
         delivered += new
-        n_before = len(lis.batches)
         with ctx.scope(f"ingest{k}"):
             t = time.monotonic()
-            _t, _q, st = ingest(spark, src, root, ckpt, max_files_per_trigger=1)
+            _t, q, st = ingest(spark, src, root, ckpt, max_files_per_trigger=1)
             rounds.append(time.monotonic() - t)
-        check(len(st) == STREAM_FILES_PER_ROUND and not any(s.skipped for s in st),
-              f"stream: round {k} applied {len(st)} batches")
-        ctx.e2e_extra.setdefault("round_runs", []).append(sorted({b["run"] for b in lis.batches[n_before:]}))
+        got = batches(q)
+        check(len(st) == len(got) == STREAM_FILES_PER_ROUND and not any(s.skipped for s in st),
+              f"stream: round {k} applied {len(st)} batches, its query ran {len(got)}")
+        timed += got
+        ctx.e2e_extra.setdefault("round_runs", []).append(str(q.runId))
         events.append(sum(pq.ParquetFile(p).metadata.num_rows for p in new))
         k += 1
     note(f"{k} ingest rounds timed")
-    timed = lis.batches[n_warm:]
-    check(len(timed) == STREAM_FILES_PER_ROUND * k, f"stream: listener saw {len(timed)} batches")
     batch_ms = [b["ms"]["triggerExecution"] for b in timed]
 
     files = base + delivered
@@ -378,20 +360,29 @@ def stream(ctx: Ctx) -> dict:
     table = LocalCowTable(spark, root)
     check_state(table, ref_df, ref_hash, "stream")
     lin = lineage_rows(root)
-    check(len(lin) == 1 + len(lis.batches), f"stream: {len(lin)} lineage rows for "
-          f"1 replay + {len(lis.batches)} micro-batches")
+    check(len(lin) == 1 + n_warm + len(timed), f"stream: {len(lin)} lineage rows for "
+          f"1 replay + {n_warm + len(timed)} micro-batches")
     base_dups = REF.lww_state(base)[1]["duplicates"]
     dups = base_dups + sum(REF.per_file_duplicates(delivered))
     check_lineage(lin, info["delivered"], dups, "stream")
     # re-running on the same checkpoint applies nothing
-    _t, _q, st = ingest(spark, src, root, ckpt, max_files_per_trigger=1)
-    check(not [s for s in st if not s.skipped], "stream: re-run applied a batch")
+    _t, q, st = ingest(spark, src, root, ckpt, max_files_per_trigger=1)
+    check(not [s for s in st if not s.skipped] and not [b for b in batches(q) if b["rows"]],
+          "stream: re-run applied a batch")
     check(REF.state_hash(table.snapshot().toPandas()) == ref_hash, "stream: re-run changed the state")
     note("stream checked")
+    reads = serve_reads(ctx, table, ref_df, info, ref_hash)
+    note("reads checked")
 
     ctx.e2e_extra["timed_batches"] = timed
     ctx.e2e_extra["timed_events"] = sum(events)
+    ctx.e2e_extra["reads"] = reads
     if ctx.tracer is not None:
+        ctx.layer["serve.point_lookup_p50_ms"] = (statistics.median(reads["point"]) * 1000, "ms")
+        ctx.layer["serve.conv_lookup_p50_ms"] = (statistics.median(reads["conv"]) * 1000, "ms")
+        ctx.layer["serve.scan_s"] = (statistics.median(reads["scan"]), "s")
+        ctx.layer["table.data_files"] = (float(len(data_files(root))), "count")
+        ctx.layer["table.delta_files"] = (float(table.delta_file_count()), "count")
         for key, parts in (("stream.add_batch_ms", ("addBatch",)),
                            ("stream.source_ms", ("latestOffset", "getBatch")),
                            ("stream.wal_ms", ("walCommit", "commitOffsets"))):
@@ -400,119 +391,73 @@ def stream(ctx: Ctx) -> dict:
             "items_per_s": sum(events) / sum(rounds), "ops": batch_ms}
 
 
-# --------------------------------------------------------------- serve ---
+# --------------------------------------------------------------- reads ---
 
-def serve(ctx: Ctx) -> dict:
+def serve_reads(ctx: Ctx, table, ref_df, info: dict, ref_hash: str) -> dict:
+    """Point lookups, conversation lookups and full snapshot() reads of the
+    table the stream left, one client in a closed loop.  The keys mix live
+    keys, keys deleted in the final state and keys never written; every
+    result must equal the reference.  One read of each kind warms up."""
     import numpy as np
     import reference as REF
-    from dipper_spark.plans.replay import replay
-    from dipper_spark.plans.target import LocalCowTable
-    from dipper_spark.streaming.ingest import ingest
 
-    spark = ctx.spark
-    base, staged = stream_inputs(ctx)
-    root, src, ckpt = ctx.path("table"), ctx.path("src"), ctx.path("ckpt")
-    with ctx.scope("base_replay"):
-        replay(spark, ctx.path("base"), root)
-    delivered = deliver_files(staged, SERVE_INGEST_FILES, src)
-    with ctx.scope("base_ingest"):
-        ingest(spark, src, root, ckpt, max_files_per_trigger=1)
-    note("table built")
-    ref_df, info = REF.lww_state(base + delivered)
     ref = REF.canonical(ref_df)
-    ref_hash = REF.state_hash(ref_df)
-    table = LocalCowTable(spark, root)
-
     rng = np.random.default_rng(ctx.seed + 7)
     live = ref[["conv_id", "turn_idx"]].to_numpy(object)
     dele = info["deleted_keys"].to_numpy(object)
-    n_pt, n_cv, n_sc = SERVE_ROUND
     rows_by_conv = {c: g for c, g in ref.groupby("conv_id")}
-
-    def point_key(i):
-        r = i % 5
-        if r < 3:
-            return tuple(live[rng.integers(len(live))])
-        if r == 3 and len(dele):
-            return tuple(dele[rng.integers(len(dele))])
-        return (f"c{9_000_000 + int(rng.integers(1_000_000)):07d}", int(rng.integers(8)))  # never written
-
     convs = list(rows_by_conv)
     dead_convs = sorted(set(dele[:, 0]) - set(convs)) if len(dele) else []
 
-    def conv_key(i):
-        r = i % 4
-        if r < 2:
-            return convs[rng.integers(len(convs))]
-        if r == 2 and dead_convs:
-            return dead_convs[rng.integers(len(dead_convs))]
+    def never_written() -> str:
         return f"c{9_000_000 + int(rng.integers(1_000_000)):07d}"
 
-    def expect_point(c, t):
-        g = rows_by_conv.get(c)
-        return g[g["turn_idx"] == t] if g is not None else ref.iloc[:0]
+    def point_key(i):
+        r = i % 4
+        if r < 2:
+            return tuple(live[rng.integers(len(live))])
+        if r == 2 and len(dele):
+            return tuple(dele[rng.integers(len(dele))])
+        return (never_written(), int(rng.integers(8)))
+
+    def conv_key(i):
+        r = i % 3
+        if r == 0:
+            return convs[rng.integers(len(convs))]
+        if r == 1 and dead_convs:
+            return dead_convs[rng.integers(len(dead_convs))]
+        return never_written()
 
     def same(got, want, what):
         g = REF.canonical(got) if len(got) else REF.canonical(ref.iloc[:0])
-        check(REF.frames_equal(g, want.reset_index(drop=True)) is None, f"serve: {what} differs from the reference")
+        check(REF.frames_equal(g, want.reset_index(drop=True)) is None, f"reads: {what} differs from the reference")
 
-    counter = {"pt": 0, "cv": 0}
+    def timed(rec, op, fn):
+        with ctx.scope(op):
+            s = time.monotonic()
+            got = fn().toPandas()
+            rec.append(time.monotonic() - s)
+        return got
 
-    def do_point(rec):
-        c, t = point_key(counter["pt"])
-        counter["pt"] += 1
-        s = time.monotonic()
-        got = table.lookup(c, t).toPandas()
-        rec.append(time.monotonic() - s)
-        same(got, expect_point(c, t), f"lookup({c!r}, {t})")
+    def one_round(counts, tag):
+        rec = {"point": [], "conv": [], "scan": []}
+        n_pt, n_cv, n_sc = counts
+        for i in range(n_pt):
+            c, t = point_key(i)
+            g = rows_by_conv.get(c)
+            got = timed(rec["point"], tag(f"point{i}"), lambda: table.lookup(c, t))
+            same(got, g[g["turn_idx"] == t] if g is not None else ref.iloc[:0], f"lookup({c!r}, {t})")
+        for i in range(n_cv):
+            c = conv_key(i)
+            got = timed(rec["conv"], tag(f"conv{i}"), lambda: table.lookup(c))
+            same(got, rows_by_conv.get(c, ref.iloc[:0]), f"lookup({c!r})")
+        for i in range(n_sc):
+            got = timed(rec["scan"], tag(f"scan{i}"), table.snapshot)
+            check(REF.state_hash(got) == ref_hash, "reads: snapshot() differs from the reference")
+        return rec
 
-    def do_conv(rec):
-        c = conv_key(counter["cv"])
-        counter["cv"] += 1
-        s = time.monotonic()
-        got = table.lookup(c).toPandas()
-        rec.append(time.monotonic() - s)
-        same(got, rows_by_conv.get(c, ref.iloc[:0]), f"lookup({c!r})")
-
-    def do_scan(rec):
-        s = time.monotonic()
-        got = table.snapshot().toPandas()
-        rec.append(time.monotonic() - s)
-        check(REF.state_hash(got) == ref_hash, "serve: snapshot() differs from the reference")
-
-    warm: list[float] = []
-    do_point(warm)
-    do_conv(warm)
-    do_scan(warm)
-    check(table.count_rows() == len(ref), "serve: count_rows differs from the reference")
-    setup_s = since_start()
-    note("warm-up reads done")
-
-    pts, cvs, scans = [], [], []
-    t_end = time.monotonic() + ctx.seconds
-    k = 0
-    while time.monotonic() < t_end or k == 0:
-        for i in range(max(n_pt, n_cv)):
-            if i < n_pt:
-                with ctx.scope(f"point{len(pts)}"):
-                    do_point(pts)
-            if i < n_cv:
-                with ctx.scope(f"conv{len(cvs)}"):
-                    do_conv(cvs)
-        for _ in range(n_sc):
-            with ctx.scope(f"scan{len(scans)}"):
-                do_scan(scans)
-        k += 1
-    ctx.layer["serve.conv_lookup_p50_ms"] = (statistics.median(cvs) * 1000, "ms")
-    ctx.layer["serve.scan_s"] = (statistics.median(scans), "s")
-    ctx.layer["table.data_files"] = (float(len(data_files(root))), "count")
-    ctx.layer["table.delta_files"] = (float(table.delta_file_count()), "count")
-    ctx.e2e_extra["serve"] = {"point_ms": [x * 1000 for x in pts], "conv_ms": [x * 1000 for x in cvs],
-                              "scan_s": scans}
-    read_wall = sum(pts) + sum(cvs) + sum(scans)
-    return {"attempted": len(pts) + len(cvs) + len(scans), "setup_s": setup_s,
-            "op_p50_ms": statistics.median(pts) * 1000,
-            "items_per_s": (len(pts) + len(cvs) + len(scans)) / read_wall, "ops": pts}
+    one_round((1, 1, 1), lambda op: "warm_read")
+    return one_round(READ_ROUND, lambda op: op)
 
 
 # ------------------------------------------------------------- queries ---
@@ -525,7 +470,7 @@ def queries(ctx: Ctx) -> dict:
 
     spark = ctx.spark
     d = ctx.path("sf")
-    TB.write_tables(d, ctx.seed, QUERY_SCALE)
+    TB.write_tables(d, ctx.seed)
     note("tables written")
     registry, oracles = E.queries(), E.oracle_sql()
     want = REF.query_results({q: oracles[q] for q in QUERIES}, d, TB.TABLES)
@@ -559,21 +504,10 @@ def queries(ctx: Ctx) -> dict:
 
 # --------------------------------------------------------- trace report ---
 
-def layer_names() -> dict[str, str]:
-    names = {"session.start_s": "s", "backfill.scan_s": "s", "backfill.decode_s": "s",
-             "backfill.split_s": "s", "backfill.collapse_s": "s", "backfill.normalize_s": "s",
-             "backfill.merge_s": "s", "backfill.lineage_s": "s", "probe_s": "s",
-             "collapse.rows_in": "count", "collapse.rows_out": "count", "collapse.task_skew": "ratio",
-             "stream.merge_ms": "ms", "stream.lineage_ms": "ms", "stream.buckets_rewritten": "count",
-             "stream.files_written": "count", "stream.bytes_written": "B",
-             "stream.add_batch_ms": "ms", "stream.source_ms": "ms", "stream.wal_ms": "ms",
-             "write_bytes_per_event": "B/event", "spark.jobs": "count", "shuffle.write_bytes": "B",
-             "shuffle.spill_bytes": "B", "jvm.gc_s": "s", "lookup.jobs": "count",
-             "lookup.input_bytes": "B", "conv_lookup.input_bytes": "B", "scan.input_bytes": "B",
-             "table.data_files": "count", "table.delta_files": "count",
-             "serve.conv_lookup_p50_ms": "ms", "serve.scan_s": "s", "jvm.peak_rss_mb": "MB"}
-    names.update({f"query.{q}_s": "s" for q in QUERIES})
-    return names
+def metric_units(kind: str) -> dict[str, str]:
+    """Metric name -> unit, for `end_to_end` or `per_layer`, as BENCHMARK.json lists them."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)[kind]}
 
 
 def trace_report(ctx: Ctx, workload: str, res: dict, log: dict) -> None:
@@ -614,26 +548,21 @@ def trace_report(ctx: Ctx, workload: str, res: dict, log: dict) -> None:
         L["collapse.rows_in"] = (statistics.median(s["result"].rows_in for s in merges), "count")
         L["collapse.rows_out"] = (statistics.median(s["result"].rows_applied + s["result"].conflicts
                                                     for s in merges), "count")
-    elif workload == "serve":
-        pt = [TR.job_totals(log, lambda d, i=i: d == f"pb|point{i}|-") for i in range(len(res["ops"]))]
-        cv = [TR.job_totals(log, lambda d, i=i: d == f"pb|conv{i}|-")
-              for i in range(len(ctx.e2e_extra["serve"]["conv_ms"]))]
-        sc = [TR.job_totals(log, lambda d, i=i: d == f"pb|scan{i}|-")
-              for i in range(len(ctx.e2e_extra["serve"]["scan_s"]))]
-        L["lookup.jobs"] = (statistics.median(x["jobs"] for x in pt), "count")
-        L["lookup.input_bytes"] = (statistics.median(x["input"] for x in pt), "B")
-        L["conv_lookup.input_bytes"] = (statistics.median(x["input"] for x in cv), "B")
-        L["scan.input_bytes"] = (statistics.median(x["input"] for x in sc), "B")
-        ops = [f"point{i}" for i in range(len(res["ops"]))]
+        reads = {kind: [TR.job_totals(log, lambda d, op=f"{kind}{i}": d == f"pb|{op}|-") for i in range(len(v))]
+                 for kind, v in ctx.e2e_extra["reads"].items()}
+        L["lookup.jobs"] = (statistics.median(x["jobs"] for x in reads["point"]), "count")
+        L["lookup.input_bytes"] = (statistics.median(x["input"] for x in reads["point"]), "B")
+        L["conv_lookup.input_bytes"] = (statistics.median(x["input"] for x in reads["conv"]), "B")
+        L["scan.input_bytes"] = (statistics.median(x["input"] for x in reads["scan"]), "B")
     else:
         ops = [f"q{p}:{q}" for p in range(len(res["ops"])) for q in QUERIES]
     if workload == "stream":
         # per micro-batch; jobs a batch runs outside the traced calls
         # carry Spark's own streaming description with the run id
         per_op = []
-        for o, runs in zip(ops, ctx.e2e_extra["round_runs"]):
-            tot = TR.job_totals(log, lambda d, o=o, runs=runs: d.startswith(f"pb|{o}|")
-                                or any(f"runId = {r}" in d for r in runs))
+        for o, run in zip(ops, ctx.e2e_extra["round_runs"]):
+            tot = TR.job_totals(log, lambda d, o=o, run=run: d.startswith(f"pb|{o}|")
+                                or f"runId = {run}" in d)
             per_op.append({k: v / STREAM_FILES_PER_ROUND for k, v in tot.items()})
     else:
         per_op = [TR.job_totals(log, lambda d, o=o: d.startswith(f"pb|{o}|")) for o in ops]
@@ -674,13 +603,14 @@ def main() -> int:
         gateway = spark.sparkContext._gateway
         if ctx.traced:
             import spans as TR
-            ctx.tracer = TR.Tracer(spark)
+            ctx.tracer = TR.Tracer(spark, data_files)
             ctx.tracer.install()
-        res = {"backfill": backfill, "stream": stream, "serve": serve, "queries": queries}[args.workload](ctx)
+        res = {"backfill": backfill, "stream": stream, "queries": queries}[args.workload](ctx)
         rss = peak_rss_mb(jvm_pid(spark))
+        note("timed operations: " + " ".join(f"{x:.3g}" for x in res["ops"]))
     except Failure as e:
         print(f"perfbench: incorrect output: {e}", file=sys.stderr)
-        print(json.dumps({"correct": False, "attempted": 1, "failed": 0, "metrics": {}}))
+        print(json.dumps({"correct": False, "attempted": 1, "failed": 1, "metrics": {}}))
         return 1
     finally:
         if spark is not None:
@@ -702,20 +632,18 @@ def main() -> int:
         log = TR.read_event_log(ctx.path("eventlog"))
         trace_report(ctx, args.workload, res, log)
         ctx.layer["jvm.peak_rss_mb"] = (rss, "MB")
-        names = layer_names()
         metrics = {}
-        for name, unit in names.items():
+        for name, unit in metric_units("per_layer").items():
             v = ctx.layer.get(name)
             metrics[name] = metric(v[0] if v and v[0] is not None else 0.0, unit)
-        e2e = {"setup_s": res["setup_s"], "op_p50_ms": res["op_p50_ms"], "items_per_s": res["items_per_s"],
-               "peak_rss_mb": rss}
+        e2e = {name: res[name] for name in metric_units("end_to_end")}
+        e2e["peak_rss_mb"] = rss
         ctx.tracer.dump(os.path.join(WORK_BASE, "traces", f"{args.workload}-seed{args.seed}.json"),
                         {"workload": args.workload, "seed": args.seed, "end_to_end": e2e,
                          "per_layer": {k: v["value"] for k, v in metrics.items()},
                          "extra": ctx.e2e_extra})
     else:
-        metrics = {"setup_s": metric(res["setup_s"], "s"), "op_p50_ms": metric(res["op_p50_ms"], "ms"),
-                   "items_per_s": metric(res["items_per_s"], "1/s")}
+        metrics = {name: metric(res[name], unit) for name, unit in metric_units("end_to_end").items()}
     print(json.dumps({"correct": True, "attempted": int(res["attempted"]), "failed": 0, "metrics": metrics}))
     return 0
 

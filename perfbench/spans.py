@@ -17,26 +17,16 @@ import statistics
 import threading
 import time
 
-SPAN_NAMES = ("read_changelog", "decode_payload", "split_valid_observed", "absent_payload_columns",
-              "collapse", "normalize_winner_text", "merge", "emit_lineage")
-
-
-def data_listing(table_root: str) -> dict[str, int]:
-    """Data files of a table: name -> bytes."""
-    d = os.path.join(table_root, "data")
-    if not os.path.isdir(d):
-        return {}
-    return {e.name: e.stat().st_size for e in os.scandir(d) if e.name.endswith(".parquet")}
-
 
 class Tracer:
-    def __init__(self, spark):
+    def __init__(self, spark, data_files):
+        """`data_files(table_root)` lists a table's data files as name -> bytes."""
         self.spark = spark
+        self.data_files = data_files
         self.spans: list[dict] = []
         self.op: str | None = None
         self.frames: dict[str, object] = {}  # last DataFrame each builder returned
         self._tls = threading.local()
-        self._undo: list[tuple[object, str, object]] = []
 
     # ------------------------------------------------------------ spans ---
     def _stack(self) -> list:
@@ -64,7 +54,7 @@ class Tracer:
             sc = tracer.spark.sparkContext
             prev = sc.getLocalProperty("spark.job.description")
             sc.setJobDescription(f"pb|{tracer.op}|{name}")
-            before = data_listing(a[0].root) if name == "merge" else None
+            before = tracer.data_files(a[0].root) if name == "merge" else None
             sp = tracer.begin(name)
             try:
                 out = fn(*a, **kw)
@@ -73,7 +63,7 @@ class Tracer:
                 sc.setJobDescription(prev)
             if before is not None:
                 # files the merge left behind, listed after it returned
-                after = data_listing(a[0].root)
+                after = tracer.data_files(a[0].root)
                 sp["new_files"] = {f: n for f, n in after.items() if f not in before}
             if name != "merge":
                 tracer.frames[name] = out[0] if name == "split_valid_observed" else out
@@ -83,9 +73,7 @@ class Tracer:
         return traced
 
     def _patch(self, owner, attr: str, name: str) -> None:
-        orig = getattr(owner, attr)
-        self._undo.append((owner, attr, orig))
-        setattr(owner, attr, self.wrap(orig, name))
+        setattr(owner, attr, self.wrap(getattr(owner, attr), name))
 
     def install(self) -> None:
         from dipper_spark.plans import replay as R
@@ -101,11 +89,6 @@ class Tracer:
         self._patch(R, "lww_collapse_window", "collapse")
         self._patch(I, "lww_collapse", "collapse")
         self._patch(LocalCowTable, "merge", "merge")
-
-    def uninstall(self) -> None:
-        for owner, attr, orig in reversed(self._undo):
-            setattr(owner, attr, orig)
-        self._undo.clear()
 
     def op_scope(self, op: str):
         """Context: spans and Spark jobs started inside belong to `op`."""

@@ -22,6 +22,7 @@ _EVENT_TYPES = np.array(["click", "view", "purchase", "signup", "error"])
 _WORDS = np.array("batch part spark line column order small sort fast value scan hash "
                   "slow group join data table window merge stream".split())
 _DAY_US = 86_400 * 1_000_000
+SCALE = 0.05  # share of the sf1 row counts: the sf0.05 shape
 
 
 def _ts(base: str, us: np.ndarray) -> np.ndarray:
@@ -32,13 +33,13 @@ def _write(out_dir: str, name: str, cols: dict, schema: pa.Schema) -> None:
     pq.write_table(pa.table(cols, schema=schema), os.path.join(out_dir, f"{name}.parquet"))
 
 
-def write_tables(out_dir: str, seed: int, scale: float = 0.1) -> dict[str, int]:
+def write_tables(out_dir: str, seed: int) -> dict[str, int]:
     """Write the seven tables; returns row counts."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
-    n_li, n_ord, n_cust = int(6_000_000 * scale), int(1_500_000 * scale), int(150_000 * scale)
-    n_part, n_ev, n_doc, n_emb = int(200_000 * scale), int(1_000_000 * scale), 5000, 2000
-    n_users = max(int(15_000 * scale), 10)
+    n_li, n_ord, n_cust = int(6_000_000 * SCALE), int(1_500_000 * SCALE), int(150_000 * SCALE)
+    n_part, n_ev, n_doc, n_emb = int(200_000 * SCALE), int(1_000_000 * SCALE), 5000, 2000
+    n_users = max(int(15_000 * SCALE), 10)
 
     li_qty = rng.integers(1, 51, n_li).astype(np.float64)
     _write(out_dir, "lineitem", {
